@@ -336,8 +336,8 @@ def j3_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def j3_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 via the inverted index (dictionary scan + postings semi-join);
-    must return exactly the scan path's result set."""
+    """J3 via the inverted index (one substring filter on the postings'
+    terms); must return exactly the scan path's result set."""
     from studiocr_spark.operators.index import build_postings
     from studiocr_spark.operators.search import global_search_indexed
 

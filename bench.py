@@ -76,28 +76,31 @@ def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def _prev_round() -> tuple[str, dict] | None:
-    """Most recent committed BENCH_r{N}.json (driver artifact; per-query
-    timings live under "parsed" when the driver wraps them)."""
+def _prev_round(root: str | None = None) -> tuple[str, dict] | None:
+    """Most recent committed BENCH_r{N}.json with usable timings
+    (per-query timings live under "parsed" when the artifact wraps
+    them). Artifacts that do not parse, or whose "parsed" is not an
+    object (``"parsed": null`` records a run whose output line could not
+    be read), are skipped in favour of the next older round."""
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, str] | None = None
+    here = root or os.path.dirname(os.path.abspath(__file__))
+    rounds = []
     for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
         m = re.search(r"BENCH_r(\d+)\.json$", p)
         if m:
-            n = int(m.group(1))
-            if best is None or n > best[0]:
-                best = (n, p)
-    if best is None:
-        return None
-    try:
-        with open(best[1]) as f:
-            obj = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    return os.path.basename(best[1]), obj.get("parsed", obj)
+            rounds.append((int(m.group(1)), p))
+    for _, p in sorted(rounds, reverse=True):
+        try:
+            with open(p) as f:
+                obj = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        parsed = obj.get("parsed", obj) if isinstance(obj, dict) else None
+        if isinstance(parsed, dict):
+            return os.path.basename(p), parsed
+    return None
 
 
 def _deltas(

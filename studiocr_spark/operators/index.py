@@ -14,9 +14,12 @@ Replaces the reference's O(docs x pages x blocks x words) nested-loop scan
   its data is already partially combined.
 
 Terms are lowercased block texts (the reference lowercases both sides of
-its search, ListDocuments.py:207,215). Substring queries are served by a
-dictionary scan over DISTINCT terms (tiny vs the corpus) followed by a
-postings equi-join — see operators/search.py.
+its search, ListDocuments.py:207,215). Substring queries are one pushed
+filter over the term-clustered postings — see operators/search.py.
+
+Every read of the segment store passes the declared schemas from
+``schemas.py``, so opening the store plans without a parquet
+footer-inference job.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..schemas import DOC_LENS_SCHEMA, POSTINGS_TABLE_SCHEMA, TERM_STATS_SCHEMA
 
 POSTING_COLS = [
     "url", "page_no", "block_no", "left", "top", "width", "height", "conf"
@@ -96,6 +101,7 @@ def build_doc_lens(postings: DataFrame) -> DataFrame:
 AUX_DIR = "_aux"
 TERM_STATS = "term_stats"
 DOC_LENS = "doc_lens"
+_AUX_SCHEMAS = {TERM_STATS: TERM_STATS_SCHEMA, DOC_LENS: DOC_LENS_SCHEMA}
 
 
 def write_postings(
@@ -120,7 +126,8 @@ def write_postings(
     ``postings`` subplan — e.g. an extraction chain — used to execute
     three times per build, once per reference); the re-read also prunes
     to the two columns the aggregations touch and guarantees the aux
-    tables describe exactly what was persisted.
+    tables describe exactly what was persisted. It passes the declared
+    schema, so it plans without a footer-inference job.
     """
     import os
 
@@ -134,8 +141,10 @@ def write_postings(
         .parquet(path)
     )
     if with_bm25_stats:
-        written = postings.sparkSession.read.parquet(path).select(
-            "term", "url"
+        written = (
+            postings.sparkSession.read.schema(POSTINGS_TABLE_SCHEMA)
+            .parquet(path)
+            .select("term", "url")
         )
         # term-clustered like the postings themselves, so a query's
         # pushed IN(term, ...) filter prunes row groups by min/max
@@ -378,9 +387,10 @@ def read_postings(spark, root: str) -> DataFrame:
     import os
 
     segs = list_segments(root)
+    reader = spark.read.schema(POSTINGS_TABLE_SCHEMA)
     if not segs:
-        return spark.read.parquet(root)
-    return spark.read.parquet(*[os.path.join(root, s) for s in segs])
+        return reader.parquet(root)
+    return reader.parquet(*[os.path.join(root, s) for s in segs])
 
 
 def _read_aux(spark, root: str, which: str) -> DataFrame | None:
@@ -394,7 +404,7 @@ def _read_aux(spark, root: str, which: str) -> DataFrame | None:
     paths = [os.path.join(d, AUX_DIR, which) for d in dirs]
     if not all(os.path.exists(p) for p in paths):
         return None
-    return spark.read.parquet(*paths)
+    return spark.read.schema(_AUX_SCHEMAS[which]).parquet(*paths)
 
 
 def read_term_stats(spark, root: str) -> DataFrame:

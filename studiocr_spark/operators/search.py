@@ -15,9 +15,10 @@ enter plans as literals, so Catalyst constant-folds them and partition
 pruning on ``url`` still applies.
 
 Scale: the scan paths are a single filter over blocks (predicate-pushed,
-whole-stage codegen). The indexed path scans the DISTINCT-term dictionary
-for substring hits (orders of magnitude smaller than blocks) and
-equi-joins postings on term — broadcast when the hit list is small.
+whole-stage codegen). The indexed path is the same filter over the
+postings' ``term`` column — one scan of the term-clustered store, no join.
+In-document search matches each block against a literal array of the
+query words, so it needs no join either.
 """
 
 from __future__ import annotations
@@ -83,20 +84,18 @@ def global_search(
 def global_search_indexed(
     postings: DataFrame, query: str, documents: DataFrame | None = None
 ) -> DataFrame:
-    """J3 via the inverted index: dictionary scan -> postings semi-join.
+    """J3 via the inverted index: one filter over the postings' terms.
 
-    The distinct-term dictionary is derived here; persist it alongside the
-    postings table in production to skip the distinct. Substring semantics
-    preserved: a term matches if it CONTAINS any query word.
+    Substring semantics preserved: a posting matches if its term CONTAINS
+    any query word. Terms are lowercased block texts, so this is the scan
+    path's predicate applied to the index instead of the blocks.
     """
     words = split_query(query)
     if not words:
         base = postings if documents is None else documents
         return base.select("url").distinct().orderBy(F.lower(F.col("url")))
-    terms = postings.select("term").distinct()
-    matched_terms = terms.filter(_any_word_contained(F.col("term"), words))
     hits = (
-        postings.join(F.broadcast(matched_terms), "term", "left_semi")
+        postings.filter(_any_word_contained(F.col("term"), words))
         .select("url")
         .distinct()
     )
@@ -119,22 +118,30 @@ def in_doc_search(
     iteration order (block-major then word, DocWindow.py:364-371 — no
     break, quirk 4). Colors precomputed per F6 so the caller can paint
     highlight boxes directly (DocWindow.py:222-232).
+
+    The words enter as a literal array of (word_idx, word) structs; each
+    block keeps the entries its text contains and explodes them, one row
+    per matching word — no join, no per-query DataFrame.
     """
     words = split_query(query, case_sensitive)
-    spark = ocr_blocks.sparkSession
     if not words:
-        return spark.createDataFrame(
+        return ocr_blocks.sparkSession.createDataFrame(
             [],
             "page_no int, matched_blocks array<struct<left:int,top:int,"
             "width:int,height:int,conf:int,text:string,color:string>>",
         )
-    words_df = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(words)], "word_idx int, word string"
+    query_words = F.array(
+        *[
+            F.struct(F.lit(i).alias("word_idx"), F.lit(w).alias("word"))
+            for i, w in enumerate(words)
+        ]
     )
-    doc_blocks = ocr_blocks.filter(F.col("url") == F.lit(url))
     text_norm = F.col("text") if case_sensitive else F.lower(F.col("text"))
-    matches = doc_blocks.join(
-        F.broadcast(words_df), text_norm.contains(F.col("word")), "inner"
+    matches = ocr_blocks.filter(F.col("url") == F.lit(url)).withColumn(
+        "m",
+        F.explode(
+            F.filter(query_words, lambda m: text_norm.contains(m["word"]))
+        ),
     )
     return (
         matches.groupBy("page_no")
@@ -144,7 +151,7 @@ def in_doc_search(
                     F.collect_list(
                         F.struct(
                             "block_no",
-                            "word_idx",
+                            F.col("m.word_idx").alias("word_idx"),
                             F.struct(
                                 "left", "top", "width", "height", "conf",
                                 "text", conf_color(F.col("conf")).alias("color"),

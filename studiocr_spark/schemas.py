@@ -120,6 +120,28 @@ POSTING_SCHEMA = T.StructType(
         T.StructField("conf", T.IntegerType(), True),
     ]
 )
+# segment-store tables (operators/index.py write_postings): the flat
+# postings files carry the term and its hash bucket beside each posting;
+# the BM25 aux tables live under the segment's _aux/ dir. Reads pass these
+# so opening the store never runs a parquet footer-inference job.
+POSTINGS_TABLE_SCHEMA = T.StructType(
+    [T.StructField("term", T.StringType(), True)]
+    + POSTING_SCHEMA.fields
+    + [T.StructField("term_bucket", T.LongType(), True)]
+)
+TERM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType(), True),
+        T.StructField("url", T.StringType(), True),
+        T.StructField("tf", T.LongType(), True),
+    ]
+)
+DOC_LENS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), True),
+        T.StructField("dl", T.LongType(), True),
+    ]
+)
 INVERTED_INDEX_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),

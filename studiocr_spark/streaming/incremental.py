@@ -27,11 +27,13 @@ import os
 import time
 from datetime import datetime, timezone
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import blocks_from_raw, extract_raw
 from ..operators.stats import page_stats_from_raw
+from ..schemas import MANIFEST_SCHEMA
 
 MANIFEST_TABLE = "manifest"
 
@@ -44,10 +46,12 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def read_manifest(spark: SparkSession, out_root: str) -> DataFrame | None:
+    """The completion manifest (declared schema: no inference job), or
+    ``None`` when no run has published one yet."""
     path = os.path.join(out_root, MANIFEST_TABLE)
     try:
-        return spark.read.parquet(path)
-    except Exception:
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    except AnalysisException:  # PATH_NOT_FOUND
         return None
 
 
@@ -154,12 +158,7 @@ def run_checkpointed_extract(
         for b in pending
         if b not in seen
     ]
-    manifest_df = spark.createDataFrame(
-        rows,
-        "bucket int, n_urls long, n_pages long, n_blocks long, "
-        "wall_sec double, docs_per_sec double, min_url string, "
-        "max_url string, completed_ts timestamp",
-    )
+    manifest_df = spark.createDataFrame(rows, MANIFEST_SCHEMA)
     manifest_df.coalesce(1).write.mode("append").parquet(
         os.path.join(out_root, MANIFEST_TABLE)
     )

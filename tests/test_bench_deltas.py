@@ -64,3 +64,22 @@ def test_deltas_flags_extract_improvement_and_handles_absence(monkeypatch):
     out2 = bench._deltas({}, extract={"sec": 6.0, "pipeline_sec": 9.0})
     assert out2["improvements"]["extract.sec"]["ratio"] == 0.6
     assert out2["improvements"]["extract.pipeline_sec"]["ratio"] == 0.45
+
+
+def test_prev_round_skips_unparsed_artifacts(tmp_path, monkeypatch):
+    """A newest artifact with ``"parsed": null`` (or unreadable JSON)
+    used to reach _deltas as None and crash it; the loader now falls
+    back to the newest artifact that carries timings."""
+    bench = _load_bench()
+    load = bench._prev_round
+    monkeypatch.setattr(bench, "_prev_round", lambda: load(str(tmp_path)))
+    good = {"parsed": {"queries": {"q1": 1.0}}}
+    (tmp_path / "BENCH_r04.json").write_text(json.dumps(good))
+    (tmp_path / "BENCH_r05.json").write_text(json.dumps({"parsed": None}))
+    (tmp_path / "BENCH_r06.json").write_text("{not json")
+    assert bench._prev_round() == ("BENCH_r04.json", good["parsed"])
+    out = bench._deltas({"q1": 2.0})
+    assert out["regressions"]["q1"]["ratio"] == 2.0
+    (tmp_path / "BENCH_r04.json").unlink()
+    assert bench._prev_round() is None
+    assert bench._deltas({"q1": 2.0}) is None

@@ -85,6 +85,71 @@ def test_read_postings_falls_back_to_flat_dir(spark, extracted, tmp_path):
     assert read_postings(spark, flat).count() == ocr_blocks.count()
 
 
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_declared_store_schemas_match_written_files(spark, extracted, tmp_path):
+    """The segment store is read with declared schemas, never inferred;
+    inferring what write_postings actually writes (postings and both aux
+    tables) must give the same fields and types. Nullability is ignored:
+    parquet files come back all-nullable."""
+    import os
+
+    from studiocr_spark.operators.index import AUX_DIR, DOC_LENS, TERM_STATS
+    from studiocr_spark.schemas import (
+        DOC_LENS_SCHEMA,
+        POSTINGS_TABLE_SCHEMA,
+        TERM_STATS_SCHEMA,
+    )
+
+    _, _, ocr_blocks = extracted
+    root = str(tmp_path / "schemas")
+    write_postings(build_postings(ocr_blocks), root, term_buckets=2)
+    for path, declared in (
+        (root, POSTINGS_TABLE_SCHEMA),
+        (os.path.join(root, AUX_DIR, TERM_STATS), TERM_STATS_SCHEMA),
+        (os.path.join(root, AUX_DIR, DOC_LENS), DOC_LENS_SCHEMA),
+    ):
+        assert _fields(spark.read.parquet(path).schema) == _fields(declared)
+
+
+def test_store_reads_submit_no_spark_job(spark, extracted, tmp_path):
+    """Opening the store (postings in both the segmented and the flat
+    layout, term_stats, doc_lens) plans without any Spark job: no
+    footer-inference job per query."""
+    import uuid
+
+    from studiocr_spark.operators.index import read_doc_lens, read_term_stats
+
+    _, _, ocr_blocks = extracted
+    p = build_postings(ocr_blocks)
+    root = str(tmp_path / "segmented")
+    flat = str(tmp_path / "flat")
+    write_postings_segment(p, root, term_buckets=2)
+    write_postings_segment(p.limit(5), root, term_buckets=2)
+    write_postings(p, flat, term_buckets=2)
+    sc = spark.sparkContext
+
+    def jobs_submitted(read) -> int:
+        # a private job group: the tracker keeps only the newest jobs,
+        # so a global before/after count could hide a new job
+        group = f"store-read-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "store read job probe")
+        try:
+            read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # the probe sees the inference job an undeclared read submits
+    assert jobs_submitted(lambda: spark.read.parquet(flat)) > 0
+    for store in (root, flat):
+        assert jobs_submitted(lambda: read_postings(spark, store)) == 0
+        assert jobs_submitted(lambda: read_term_stats(spark, store)) == 0
+        assert jobs_submitted(lambda: read_doc_lens(spark, store)) == 0
+
+
 def test_unpublished_segment_is_invisible(spark, extracted, tmp_path):
     """Write-audit-publish: a segment dir written but not yet listed in
     SEGMENTS (crash before publish) must not appear to readers, and

@@ -71,17 +71,24 @@ def test_extract_pipeline_is_shuffle_free(spark, pages_df):
     assert shuffle_exchanges(stats) == []
 
 
-def test_in_doc_search_broadcasts_words(spark, extracted):
+def test_in_doc_search_needs_no_join(spark, extracted, tmp_path):
+    """J4 matches each block against a literal word array: no join, no
+    broadcast of a per-query words DataFrame, no local relation."""
     from studiocr_spark.operators.search import in_doc_search
 
     _, _, ocr_blocks = extracted
-    url = ocr_blocks.select("url").first().url
-    df = in_doc_search(ocr_blocks, url, "cat dog")
-    # a contains-theta join plans as BroadcastNestedLoopJoin with the tiny
-    # words side broadcast — the design intent; a non-broadcast NLJ or a
-    # CartesianProduct here would be the regression
-    plan = formatted_plan(df)
-    assert "BroadcastNestedLoopJoin" in plan and "CartesianProduct" not in plan
+    # read back from parquet, as a served block table is, so the plan
+    # holds only the query's own operators, not the fixture's lineage
+    path = str(tmp_path / "blocks")
+    ocr_blocks.write.parquet(path)
+    blocks = spark.read.parquet(path)
+    url = blocks.select("url").first().url
+    for case_sensitive in (False, True):
+        df = in_doc_search(blocks, url, "cat dog", case_sensitive)
+        plan = formatted_plan(df)
+        assert "Join" not in plan and "CartesianProduct" not in plan, plan
+        assert "BroadcastExchange" not in plan, plan
+        assert "LocalTableScan" not in plan, plan
 
 
 def test_assemble_doc_text_single_shuffle(spark, extracted):
@@ -116,9 +123,26 @@ def test_ann_brute_force_broadcasts_queries(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_indexed_search_broadcasts_dictionary(spark):
-    df = entry.j3_indexed_search(spark, SF)
-    assert has_broadcast_join(df)
+def test_indexed_search_filters_postings_without_join(spark, extracted, tmp_path):
+    """J3 indexed is one pushed filter over the postings: no term
+    dictionary, no join, and the store is scanned exactly once."""
+    from studiocr_spark.operators.index import (
+        build_postings,
+        read_postings,
+        write_postings_segment,
+    )
+    from studiocr_spark.operators.search import global_search_indexed
+
+    _, _, ocr_blocks = extracted
+    root = str(tmp_path / "postings")
+    write_postings_segment(build_postings(ocr_blocks), root, term_buckets=2)
+    for df in (
+        global_search_indexed(read_postings(spark, root), "cat dog"),
+        entry.j3_indexed_search(spark, SF),
+    ):
+        plan = formatted_plan(df)
+        assert "Join" not in plan, plan
+        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
 
 
 def test_lsh_topk_broadcasts_query_buckets(spark):

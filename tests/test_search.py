@@ -92,6 +92,42 @@ def test_in_doc_search_matches_oracle(extracted, corpus, query, case_sensitive):
     assert checked
 
 
+@pytest.mark.parametrize("case_sensitive", [False, True])
+def test_in_doc_search_repeated_word_matches_oracle(
+    extracted, corpus, case_sensitive
+):
+    """A repeated query word repeats every matched block once per copy,
+    in (block, word) order; case-sensitive matching leaves 'Cat' out."""
+    _, _, ocr_blocks = extracted
+    query = "cat cat"
+    urls = [
+        u for u in corpus if oracle.in_doc_search(corpus[u], query, case_sensitive)
+    ][:6]
+    assert urls
+    for url in urls:
+        expected = oracle.in_doc_search(corpus[url], query, case_sensitive)
+        rows = in_doc_search(ocr_blocks, url, query, case_sensitive).collect()
+        got = {
+            r.page_no: [
+                (b.left, b.top, b.width, b.height, b.conf, b.text)
+                for b in r.matched_blocks
+            ]
+            for r in rows
+        }
+        exp = {
+            p: [
+                (b["left"], b["top"], b["width"], b["height"], b["conf"], b["text"])
+                for b in blocks
+            ]
+            for p, blocks in expected.items()
+        }
+        assert got == exp, (url, case_sensitive)
+        for blocks in got.values():
+            assert blocks[0::2] == blocks[1::2]  # each block twice, adjacent
+            if case_sensitive:
+                assert all("cat" in b[-1] for b in blocks)
+
+
 def test_duplicate_per_word_quirk(spark):
     """A block matching k query words appears k times (DocWindow.py:369-371)."""
     from studiocr_spark.schemas import OCR_BLOCKS_SCHEMA
