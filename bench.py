@@ -29,6 +29,13 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # amortizes over fewer docs), making round-over-round extract numbers
 # incomparable with BENCH/BASELINE.md's local[32] row
 EXTRACT_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "60000"))
+# the output line is read back from a 2000-char tail; the deltas block
+# it carries is capped to the DELTAS_TOP largest moves each way, and the
+# full table goes to DELTAS_DETAIL
+DELTAS_TOP = 5
+DELTAS_DETAIL = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".bench_deltas.json"
+)
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -154,6 +161,68 @@ def _deltas(
     }
 
 
+def _capped_deltas(deltas: dict | None) -> dict | None:
+    """The deltas block of the output line: counts and the DELTAS_TOP
+    largest ratios each way. The full table is written to DELTAS_DETAIL,
+    so a run with many regressions cannot push the line past the tail."""
+    if deltas is None:
+        return None
+    with open(DELTAS_DETAIL, "w") as f:
+        json.dump(deltas, f, indent=1, sort_keys=True)
+
+    def top(recs: dict[str, dict], worst_first: bool) -> dict[str, float]:
+        ranked = sorted(
+            recs.items(), key=lambda kv: kv[1]["ratio"], reverse=worst_first
+        )
+        return {q: rec["ratio"] for q, rec in ranked[:DELTAS_TOP]}
+
+    return {
+        "baseline": deltas["baseline"],
+        "threshold": deltas["threshold"],
+        "n_regressions": len(deltas["regressions"]),
+        "n_improvements": len(deltas["improvements"]),
+        "regressions": top(deltas["regressions"], True),
+        "improvements": top(deltas["improvements"], False),
+        "detail": os.path.basename(DELTAS_DETAIL),
+    }
+
+
+def _result_line(
+    timings: dict[str, float], extract_sec: float, pipeline_sec: float
+) -> str:
+    """The one-line JSON result (Spark-free, so its length is testable)."""
+    return json.dumps(
+        {
+            "metric": "headline_suite_seconds",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": SF_DIR,
+            "cpus": CPUS,
+            # both extract protocols live here WITH their corpus
+            # size: round 2 timed extract_pipeline inside `queries`
+            # on a 10k corpus, which made docs/sec incomparable
+            # across reports (fixed overhead amortization)
+            "extract": {
+                "docs": EXTRACT_DOCS,
+                "sec": round(extract_sec, 3),
+                "docs_per_sec": round(EXTRACT_DOCS / extract_sec, 2),
+                "pipeline_sec": pipeline_sec,
+                "pipeline_docs_per_sec": round(
+                    EXTRACT_DOCS / pipeline_sec, 2
+                ),
+            },
+            "deltas": _capped_deltas(
+                _deltas(
+                    timings,
+                    extract={"sec": round(extract_sec, 3),
+                             "pipeline_sec": pipeline_sec},
+                )
+            ),
+        }
+    )
+
+
 def main() -> None:
     # The ANN entries' dump write+read-back is DuckDB-oracle plumbing,
     # not operator cost (it inflated ann_lsh_topk ~36% in BENCH_r04);
@@ -271,39 +340,7 @@ def main() -> None:
     # compared against
     extract_sec = min(raw_pass() for _ in range(3))
     pipeline_sec = round(min(pipeline_pass() for _ in range(2)), 3)
-    docs_per_sec = EXTRACT_DOCS / extract_sec
-
-    total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_suite_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": SF_DIR,
-                "cpus": CPUS,
-                # both extract protocols live here WITH their corpus
-                # size: round 2 timed extract_pipeline inside `queries`
-                # on a 10k corpus, which made docs/sec incomparable
-                # across reports (fixed overhead amortization)
-                "extract": {
-                    "docs": EXTRACT_DOCS,
-                    "sec": round(extract_sec, 3),
-                    "docs_per_sec": round(docs_per_sec, 2),
-                    "pipeline_sec": pipeline_sec,
-                    "pipeline_docs_per_sec": round(
-                        EXTRACT_DOCS / pipeline_sec, 2
-                    ),
-                },
-                "deltas": _deltas(
-                    timings,
-                    extract={"sec": round(extract_sec, 3),
-                             "pipeline_sec": pipeline_sec},
-                ),
-            }
-        )
-    )
+    print(_result_line(timings, extract_sec, pipeline_sec))
     spark.stop()
     # the corpus dir is intentionally KEPT: it is deterministic, shared
     # with bench_scaling, and regenerating 60k docs per run would cost

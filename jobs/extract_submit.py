@@ -48,7 +48,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--backend", default="tesseract",
                     choices=["tesseract", "bitmap"])
     ap.add_argument("--n-buckets", type=int, default=1024,
-                    help="checkpoint/lineage buckets (>= 10 x executors)")
+                    help="checkpoint/lineage buckets (>= 10 x executors); "
+                         "each pending bucket is one decode task, so keep "
+                         "buckets >= task slots")
     ap.add_argument("--build-index", action="store_true",
                     help="also maintain the postings inverted index "
                          "(incremental: each run indexes only the "

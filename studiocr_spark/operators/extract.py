@@ -10,8 +10,10 @@ only wide operation in the whole job is the optional per-url text
 reassembly for multi-page documents.
 
 Scale notes (100 TB):
-- decode cost is per-row and embarrassingly parallel -> ``repartition(N)``
-  round-robin spreads payload bytes evenly; no key skew exists at this
+- decode cost is per-row and embarrassingly parallel -> it runs in as
+  many tasks as the input has partitions; the resumable extract
+  (streaming/incremental.py) shuffles the compressed input by bucket so
+  each pending bucket is one decode task. No key skew exists at this
   stage (skew handling lives where keys do: index build / search joins).
 - Arrow batch size is capped (session.ARROW_BATCH_ROWS) because rows carry
   ~10-100 KB binary payloads.
@@ -98,7 +100,6 @@ def non_whitespace_filter(text_col: Column) -> Column:
 def extract_raw(
     pages: DataFrame,
     backend: str = "bitmap",
-    num_partitions: int | None = None,
     page_text_join: str = " ",
     errors: str = "skip",
     with_images: bool = True,
@@ -174,8 +175,6 @@ def extract_raw(
                     )
             yield pd.DataFrame(out, columns=cols)
 
-    if num_partitions:
-        pages = pages.repartition(num_partitions)
     udf_out = pages.select("url", "html").mapInPandas(run, schema=_UDF_SCHEMA)
     # reassemble the array<struct> view JVM-side (arrays_zip is a zero-copy
     # projection); block_no = array ordinal, preserved through filtering
@@ -254,7 +253,6 @@ def assemble_doc_text(raw_df: DataFrame, sep: str = " ") -> DataFrame:
 def run_extract(
     pages: DataFrame,
     backend: str = "bitmap",
-    num_partitions: int | None = None,
     persist: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Convenience: (ocr_pages_df, ocr_blocks_df) from a pages table.
@@ -270,7 +268,7 @@ def run_extract(
     owns cleanup — unpersist via either returned frame's lineage or
     ``spark.catalog.clearCache()`` once both outputs are materialized.
     """
-    raw = extract_raw(pages, backend=backend, num_partitions=num_partitions)
+    raw = extract_raw(pages, backend=backend)
     if persist:
         from pyspark import StorageLevel
 

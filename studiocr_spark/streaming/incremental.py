@@ -7,14 +7,18 @@ into ``n_buckets`` url-hash buckets; each run
 
 1. reads the completion manifest (if any),
 2. anti-joins to find PENDING buckets,
-3. extracts only those buckets, writing outputs ``partitionBy(bucket)``
-   with dynamic partition overwrite — so re-processing a bucket after a
-   crash REPLACES its partition instead of duplicating it (idempotent
-   retry),
+3. extracts only those buckets, one decode task per pending bucket (a
+   by-number shuffle of the compressed input rows, which AQE cannot
+   coalesce back into fewer tasks), writing outputs ``partitionBy(bucket)``
+   with dynamic partition overwrite — one file per bucket per table, and
+   re-processing a bucket after a crash REPLACES its partition instead of
+   duplicating it (idempotent retry),
 4. appends one manifest row per completed bucket: counts, wall seconds,
    docs/sec, min/max url (lineage), completion timestamp — the audit +
-   publish step. The manifest is only written after the data commit, so
-   a crash between the two reprocesses work but never loses or dupes it.
+   publish step. The rows are built JVM-side from an Arrow table, so the
+   manifest's writes and its callers' actions start no Python worker.
+   The manifest is only written after the data commit, so a crash
+   between the two reprocesses work but never loses or dupes it.
 
 Progress metrics (the reference's per-page % pipe, OcrWorker.py:89-93)
 map to ``df.observe`` rows counted during the same action — zero extra
@@ -27,9 +31,11 @@ import os
 import time
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.extract import blocks_from_raw, extract_raw
 from ..operators.stats import page_stats_from_raw
@@ -85,9 +91,14 @@ def run_checkpointed_extract(
     if not pending:
         return None
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    bucketed = with_bucket(pages, n_buckets).filter(
-        F.col("bucket").isin(pending)
+    # one decode task per pending bucket: shuffle only the compressed
+    # input rows, by the bucket's slot in ``pending``
+    slot = F.array_position(F.array(*map(F.lit, pending)), F.col("bucket"))
+    bucketed = (
+        with_bucket(pages, n_buckets)
+        .filter(F.col("bucket").isin(pending))
+        .select("url", "html", "bucket")
+        .repartitionById(len(pending), slot.cast("int") - 1)
     )
 
     t0 = time.time()
@@ -109,14 +120,16 @@ def run_checkpointed_extract(
         # approx sketch is mergeable and good enough for progress display
         F.approx_count_distinct("url").alias("urls"),
     )
-    ocr_pages.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_root, "ocr_pages")
-    )
+    # dynamic overwrite per write, not per session: a session-wide setting
+    # would turn every later partitioned overwrite into a dynamic one
+    ocr_pages.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(os.path.join(out_root, "ocr_pages"))
     blocks_from_raw(ok.drop("bucket")).withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    ).write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_root, "ocr_blocks")
-    )
+    ).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(os.path.join(out_root, "ocr_blocks"))
     wall = time.time() - t0
 
     # audit: per-bucket counts + lineage, computed from the cached raw
@@ -158,7 +171,13 @@ def run_checkpointed_extract(
         for b in pending
         if b not in seen
     ]
-    manifest_df = spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    # from Arrow, not Python dicts: the plan is a local relation, with no
+    # PythonRDD behind the write and the caller's actions; the explicit
+    # Arrow schema types an all-null min_url/max_url column
+    manifest_df = spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(MANIFEST_SCHEMA)),
+        MANIFEST_SCHEMA,
+    )
     manifest_df.coalesce(1).write.mode("append").parquet(
         os.path.join(out_root, MANIFEST_TABLE)
     )

@@ -83,3 +83,40 @@ def test_prev_round_skips_unparsed_artifacts(tmp_path, monkeypatch):
     (tmp_path / "BENCH_r04.json").unlink()
     assert bench._prev_round() is None
     assert bench._deltas({"q1": 2.0}) is None
+
+
+def test_result_line_fits_tail_with_many_regressions(tmp_path, monkeypatch):
+    """Round 5's line overflowed the 2000-char tail it is read from
+    because every regression rode in it. With every headline query and
+    both extract times regressed, the line keeps DELTAS_TOP of each and
+    the side file keeps them all."""
+    bench = _load_bench()
+    detail = tmp_path / "deltas.json"
+    monkeypatch.setattr(bench, "DELTAS_DETAIL", str(detail))
+    prev = {
+        "queries": {q: 0.1 for q in bench.HEADLINE},
+        "extract": {"sec": 1.0, "pipeline_sec": 1.0},
+    }
+    monkeypatch.setattr(
+        bench, "_prev_round", lambda: ("BENCH_r99.json", prev)
+    )
+    # main() rounds each timing to 3 decimals
+    timings = {
+        q: round(123.456 + 7.777 * i, 3) for i, q in enumerate(bench.HEADLINE)
+    }
+    line = bench._result_line(timings, 9876.543, 9876.543)
+    assert len(line) < 2000, len(line)
+    assert "\n" not in line
+
+    deltas = json.loads(line)["deltas"]
+    n = len(bench.HEADLINE) + 2
+    assert deltas["n_regressions"] == n
+    assert len(deltas["regressions"]) == bench.DELTAS_TOP
+    full = json.loads(detail.read_text())
+    assert len(full["regressions"]) == n
+    assert full["regressions"]["extract.sec"]["prev"] == 1.0
+    # the largest ratios are the ones kept
+    worst = sorted(
+        full["regressions"].items(), key=lambda kv: -kv[1]["ratio"]
+    )[: bench.DELTAS_TOP]
+    assert deltas["regressions"] == {q: r["ratio"] for q, r in worst}
